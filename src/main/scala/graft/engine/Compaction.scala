@@ -964,7 +964,7 @@ object Compaction {
     * against them have finished), then a debt-triggered compact.
     * MUST run under the single-writer discipline (no merge in flight on
     * `path`) — from a stream's own foreachBatch between batches (see
-    * CdcStream.maintainFingerprintIndex, which adds the idempotency
+    * CdcStream.maintainStreamedIndex, which adds the idempotency
     * ledger to this verb) or with writers quiesced. Returns true if the
     * compact rewrote anything. */
   def maintainIndex(spark: SparkSession, path: String, kind: String,

@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
-import graft.engine.{Scd2, SnapshotStore}
+import org.apache.spark.sql.types.{StringType, StructType}
+import graft.engine.{Caches, Compaction, Ledger, Scd2, SnapshotStore}
+import graft.ops.{DedupOps, SimilarityOps, TextOps}
 
 /** Streaming CDC → SCD2: the reference's polling loop
   * (/root/reference/src/cdc/log_extractor.py:229-270 + the loader) as a
@@ -22,6 +23,11 @@ import graft.engine.{Scd2, SnapshotStore}
   *    [[SnapshotStore]] in `foreachBatch` (the deliberate formulation —
   *    `flatMapGroupsWithState` would hold the whole dimension in stream
   *    state for no benefit, SURVEY §7.4).
+  *
+  * Every stream here is one [[fileStream]] (reader, checkpoint, one
+  * `foreachBatch`, trigger) around a per-batch body; the screening
+  * families share one body ([[screenBatch]]) and every absorb runs
+  * under one replay protocol ([[absorbOnce]]).
   */
 object CdcStream {
 
@@ -42,7 +48,7 @@ object CdcStream {
             maxFilesPerTrigger: Int = 1,
             dimBuckets: Int = 0,
             manifestCarry: Boolean = false,
-            materializeEvery: Int = 0): StreamingQuery = {
+            materializeEvery: Int = 0): StreamingQuery =
     // maxFilesPerTrigger is the throughput/latency dial: 1 keeps the
     // one-file-≙-one-batch replay granularity the tests pin; raising it
     // coalesces arriving files into fewer micro-batches, amortizing the
@@ -50,32 +56,56 @@ object CdcStream {
     // production tuning bench/STREAM_r18.md measures. The merge is
     // multi-change-per-key correct either way (interval construction
     // within the batch), so coalescing changes cost, never answers.
-    val changes = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .json(inDir)
-      .withWatermark(ts, "1 minute")
+    fileStream(spark, inDir, checkpointDir, schema, maxFilesPerTrigger,
+      availableNow, watermark = Some(ts)) { (batch, id, _) =>
+      applyChangeBatch(store, batch, key, ts, tie, opCol, dimBuckets,
+        manifestCarry)
+      // manifest chains grow one referenced-owner hop per batch and
+      // vacuum must keep every referenced owner — without a
+      // scheduled materialization the store could never reclaim.
+      // Every N batches, rewrite the snapshot fully local (the
+      // OPTIMIZE tick — same amortization posture as the index
+      // compaction ticks: periodic, between batches, never
+      // concurrent with a merge), so the chain length is bounded by
+      // N and the pre-materialize owners age out at the next vacuum.
+      if (manifestCarry && every(materializeEvery, id))
+        materializeSnapshot(store, dimBuckets)
+    }
 
-    val writer = changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyChangeBatch(store, batch, key, ts, tie, opCol, dimBuckets,
-          manifestCarry)
-        // manifest chains grow one referenced-owner hop per batch and
-        // vacuum must keep every referenced owner — without a
-        // scheduled materialization the store could never reclaim.
-        // Every N batches, rewrite the snapshot fully local (the
-        // OPTIMIZE tick — same amortization posture as the index
-        // compaction ticks: periodic, between batches, never
-        // concurrent with a merge), so the chain length is bounded by
-        // N and the pre-materialize owners age out at the next vacuum.
-        if (manifestCarry && materializeEvery > 0 && id > 0 &&
-            id % materializeEvery == 0)
-          materializeSnapshot(store, dimBuckets)
-      }
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+  /** The ONE micro-batch runner behind [[start]] and every family
+    * stream: a JSON file source over `inGlob` (`maxFiles` per trigger —
+    * 1 keeps one file ≙ one micro-batch, the replay granularity the
+    * ledger protocol pins), optionally watermarked on the `watermark`
+    * column, the query's checkpoint, one `foreachBatch`, and the
+    * trigger (`AvailableNow` drains what is there and stops; otherwise
+    * the default trigger keeps polling). `body` gets each micro-batch,
+    * its id and the query's replay memo — created here, once per
+    * started query, so it lives exactly as long as the query and a
+    * restart re-seeds it from the ledger. */
+  private def fileStream(spark: SparkSession, inGlob: String, ckpt: String,
+                         schema: StructType, maxFiles: Int = 1,
+                         availableNow: Boolean = true,
+                         watermark: Option[String] = None)(
+                         body: (DataFrame, Long, HighWater) => Unit)
+      : StreamingQuery = {
+    val src = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", maxFiles.toString).json(inGlob)
+    val memo = new HighWater
+    val writer = watermark.fold(src)(src.withWatermark(_, "1 minute"))
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, id: Long) => body(batch, id, memo) }
+    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
+      .start()
   }
+
+  /** The schedule of every maintenance, retrain, rebuild, optimize and
+    * materialize tick: each `n`-th micro-batch, run AFTER that batch is
+    * fully applied and ledgered (a crash inside the tick re-runs only
+    * the tick, whose verbs are idempotent), never on batch 0 (nothing
+    * has accumulated yet); `n <= 0` disables the tick. */
+  private def every(n: Int, id: Long): Boolean =
+    n > 0 && id > 0 && id % n == 0
 
   /** Publish a fully-LOCAL copy of the current bucketed snapshot (one
     * clustered file per bucket, no manifest) — the OPTIMIZE verb that
@@ -166,26 +196,21 @@ object CdcStream {
     // full republish on the first batch). mergeBatch still reads the op
     // from the batch itself.
     val payload = opCol.fold(batch)(c => batch.drop(c))
-    if (dimBuckets <= 0) {
-      // explicit whole-dim dial: a snapshot previously run bucketed is
-      // MIGRATED BACK (bucket column dropped, next version unbucketed)
-      // rather than crashing the merge on the unexpected column
-      val dim = store.read().map(_.drop(BucketCol))
-        .getOrElse(Scd2.rebuild(payload.limit(0), key, ts, tie))
-      val merged = Scd2.mergeBatch(Scd2.evolveSchema(dim, payload),
-        batch, key, ts, tie, opCol)
-      // cleanup in finally: a throwing publish replays the batch, and
-      // each failed attempt must not leave the routed-batch cache
-      // resident (a crash-looping stream accumulates one per attempt)
-      try store.publish(merged.dim)
-      finally merged.cleanup()
-      return
-    }
-    require(!batch.columns.contains(BucketCol),
+    require(dimBuckets <= 0 || !batch.columns.contains(BucketCol),
       s"applyChangeBatch: batch carries a '$BucketCol' column — the " +
         "name is reserved for the snapshot's key-bucket partition")
+    val meta = Map(DimBucketsMeta -> dimBuckets.toString)
     def withBucket(df: DataFrame) = bucketed(df, key, dimBuckets)
-
+    // the whole current dim — an explicit whole-dim dial MIGRATES a
+    // snapshot previously run bucketed BACK (bucket column dropped, next
+    // version unbucketed) rather than crashing the merge on the
+    // unexpected column
+    def wholeDim = store.read().map(_.drop(BucketCol))
+      .getOrElse(Scd2.rebuild(payload.limit(0), key, ts, tie))
+    // a full partitioned publish (re-)establishes the bucketed layout
+    // and its persisted count
+    def fullBucketed(d: DataFrame): Unit =
+      store.publish(clustered(withBucket(d)), Seq(BucketCol), meta)
     // layout decision from a FILESYSTEM probe, never a schema read: a
     // full partition discovery just to ask "is this snapshot bucketed?"
     // would cost O(partitions) driver listing per micro-batch. The
@@ -198,47 +223,40 @@ object CdcStream {
     // INSIDE the version dir and rides every publish's all-or-nothing
     // pointer flip, so data and meta can never disagree across a crash
     // (a root-level meta written after the publish could).
-    if (store.currentVersion().nonEmpty &&
-        store.currentPartitionCols() == Seq(BucketCol) &&
-        store.currentVersionSidecar(DimBucketsMeta)
-          .contains(dimBuckets.toString)) {
-      // the batch's bucket set: bounded by dimBuckets, driver-safe
-      val affected = withBucket(batch).select(col(BucketCol))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      // manifest-style dim read: ONLY the affected bucket dirs are
-      // listed and scanned — per-batch read cost is O(changed buckets)
-      // in files AND in listing, independent of how many buckets the
-      // snapshot holds
-      val dimAff = store.readCurrentPartitions(BucketCol, affected)
-        .drop(BucketCol)
-      val evolved = Scd2.evolveSchema(dimAff, payload)
-      if (evolved.columns.length != dimAff.columns.length) {
+    lazy val incremental = store.currentVersion().nonEmpty &&
+      store.currentPartitionCols() == Seq(BucketCol) &&
+      store.currentVersionSidecar(DimBucketsMeta)
+        .contains(dimBuckets.toString)
+    val (dim, publish): (DataFrame, DataFrame => Unit) =
+      if (dimBuckets <= 0) (wholeDim, store.publish(_))
+      // bootstrap (empty store), migration (pre-bucketing snapshot),
+      // or a CHANGED bucket count
+      else if (!incremental) (wholeDim, fullBucketed)
+      else {
+        // the batch's bucket set: bounded by dimBuckets, driver-safe
+        val affected = withBucket(batch).select(col(BucketCol))
+          .distinct().collect().map(_.getInt(0)).toSeq
+        // manifest-style dim read: ONLY the affected bucket dirs are
+        // listed and scanned — per-batch read cost is O(changed buckets)
+        // in files AND in listing, independent of how many buckets the
+        // snapshot holds
+        val dimAff = store.readCurrentPartitions(BucketCol, affected)
+          .drop(BucketCol)
         // schema widened — full republish so every partition's files
         // carry the new columns (see doc above)
-        val full = Scd2.evolveSchema(
-          store.read().get.drop(BucketCol), payload)
-        val merged = Scd2.mergeBatch(full, batch, key, ts, tie, opCol)
-        try store.publish(clustered(withBucket(merged.dim)),
-          Seq(BucketCol), Map(DimBucketsMeta -> dimBuckets.toString))
-        finally merged.cleanup()
-      } else {
-        val merged = Scd2.mergeBatch(evolved, batch, key, ts, tie, opCol)
-        try store.publishIncremental(withBucket(merged.dim), BucketCol,
-          Map(DimBucketsMeta -> dimBuckets.toString), manifestCarry)
-        finally merged.cleanup()
+        if (Scd2.evolveSchema(dimAff, payload).columns.length !=
+            dimAff.columns.length)
+          (store.read().get.drop(BucketCol), fullBucketed)
+        else (dimAff, (d: DataFrame) => store.publishIncremental(
+          withBucket(d), BucketCol, meta, manifestCarry))
       }
-    } else {
-      // bootstrap (empty store), migration (pre-bucketing snapshot),
-      // or a CHANGED bucket count: one full publish (re-)establishes
-      // the bucketed layout and its persisted count
-      val dim = store.read().map(_.drop(BucketCol))
-        .getOrElse(Scd2.rebuild(payload.limit(0), key, ts, tie))
-      val merged = Scd2.mergeBatch(Scd2.evolveSchema(dim, payload),
-        batch, key, ts, tie, opCol)
-      try store.publish(clustered(withBucket(merged.dim)),
-        Seq(BucketCol), Map(DimBucketsMeta -> dimBuckets.toString))
-      finally merged.cleanup()
-    }
+    val merged = Scd2.mergeBatch(Scd2.evolveSchema(dim, payload),
+      batch, key, ts, tie, opCol)
+    // cleanup in finally: a throwing publish replays the batch, and
+    // each failed attempt must not leave the routed-batch cache
+    // resident (a crash-looping stream accumulates one per attempt)
+    try publish(merged.dim)
+    finally merged.cleanup()
   }
 
   /** The per-version bucket-count sidecar — the layout's equivalent of
@@ -326,7 +344,7 @@ object CdcStream {
     *
     * Long-running streams accumulate append debt in the index (one
     * postings file per batch per partition). `maintainEvery` = N > 0
-    * runs [[maintainFingerprintIndex]] every N batches INSIDE the
+    * runs [[maintainStreamedIndex]] every N batches INSIDE the
     * trigger loop — between batches, never concurrent with a merge,
     * which is the single-writer discipline Compaction requires (merge /
     * compact / vacuum are scheduled, never concurrent; an external
@@ -336,41 +354,25 @@ object CdcStream {
     * per batch: compaction rewrites the whole table, so inlining it
     * every batch would make total write work quadratic in stream
     * lifetime; every N batches it amortizes to linear. 0 disables the
-    * tick — then schedule [[maintainFingerprintIndex]] yourself at
-    * moments the stream is quiesced (stopped, or drained between
-    * AvailableNow runs). */
+    * tick — then schedule [[maintainStreamedIndex]] (kind
+    * `fingerprint`) yourself at moments the stream is quiesced
+    * (stopped, or drained between AvailableNow runs). */
   def dedupScreenStream(spark: SparkSession, inGlob: String,
                         checkpointDir: String, schema: StructType,
                         indexPath: String,
                         onHits: (DataFrame, Long) => Unit,
                         maintainEvery: Int = 0,
-                        maintainMaxFiles: Int = 8): StreamingQuery = {
-    // re-seed the replay memo from the ledger at stream start: a prior
-    // stream in this JVM may have run against an index since rebuilt at
-    // the same path (ledger wiped, batch ids restarted) — a stale
-    // high-water would silently skip absorbing the new batches
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        screenAndAbsorb(spark, batch, id, indexPath, checkpointDir, onHits)
-        // the maintenance tick runs AFTER the batch is fully applied
-        // and ledgered, so a crash inside maintenance re-runs only
-        // maintenance (idempotent: triggers re-evaluate debt), never
-        // the merge
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainFingerprintIndex(spark, indexPath, maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                        maintainMaxFiles: Int = 8): StreamingQuery =
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      screenBatch(spark, batch, id, indexPath, checkpointDir, onHits, memo,
+        fingerprint(spark, indexPath))
+      if (every(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "fingerprint",
+          maintainMaxFiles)
+    }
 
-  /** One scheduled-maintenance tick for a streamed-into fingerprint
-    * index — the glue the lifecycle verbs need to actually run beside a
+  /** One scheduled-maintenance tick for ANY streamed index family —
+    * the glue the lifecycle verbs need to actually run beside a
     * live stream (the reference runs its GC inline on a cadence the
     * same way, /root/reference/src/cdc/log_extractor.py:212-227,266-267):
     *
@@ -382,30 +384,21 @@ object CdcStream {
     *  2. compact — rewrites tables whose per-partition append debt
     *     exceeds the threshold, behind the atomic pointer swap (no-op
     *     below it — calling this tick too often costs two file listings,
-    *     not a rewrite);
+    *     not a rewrite), with the family's own extras (sidecar
+    *     collapse, tombstone serving) inside
+    *     [[graft.engine.Compaction.maintainIndex]];
     *  3. the idempotency ledger gets the same treatment (it appends one
     *     tiny file per batch forever).
     *
+    * Every stream's `maintainEvery` wiring lands here, so a fix to the
+    * tick's ordering or error handling reaches every family at once.
     * MUST run while no merge is in flight on `indexPath` — from the
     * stream's own foreachBatch (between batches, as `maintainEvery`
     * wires it), or with the stream stopped/drained. */
-  def maintainFingerprintIndex(spark: SparkSession, indexPath: String,
-                               maxFilesPerPartition: Int = 8): Unit =
-    maintainStreamedIndex(spark, indexPath, "fingerprint",
-      maxFilesPerPartition)
-
-  /** The kind-generic form of [[maintainFingerprintIndex]] — one
-    * maintenance tick for ANY streamed index family: the Compaction
-    * verb (vacuum → sidecar collapse → debt-triggered compact) plus the
-    * stream's own idempotency-ledger vacuum + compact. Both screening
-    * streams' `maintainEvery` wiring lands here, so a fix to the tick's
-    * ordering or error handling reaches every family at once. Same
-    * single-writer requirement as the Compaction verbs. */
   def maintainStreamedIndex(spark: SparkSession, indexPath: String,
                             kind: String,
                             maxFilesPerPartition: Int = 8,
                             retainApplied: Seq[String] = Nil): Unit = {
-    import graft.engine.{Compaction, Ledger}
     Compaction.maintainIndex(spark, indexPath, kind, maxFilesPerPartition,
       retainApplied)
     Compaction.vacuum(s"$indexPath/_ledger")
@@ -435,57 +428,77 @@ object CdcStream {
     * screening answers survive the replay unchanged (only the advisory
     * hotListDrift signal can overstate).
     *
-    * The ledger is CONSULTED (a Spark job over the whole ledger table)
-    * only on this process's first batch per (index, stream) — micro-
-    * batch ids are monotonic per checkpoint, so after seeding the memo
-    * with the ledger's high-water id, replay detection is an in-memory
-    * compare. Without the memo, the hot path paid a full ledger scan
-    * per trigger, growing with stream lifetime. */
+    * A direct call consults the ledger afresh (one scan); a stream
+    * consults it once per started query ([[absorbOnce]]). */
   def screenAndAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
                       indexPath: String, streamId: String,
-                      onHits: (DataFrame, Long) => Unit): Unit = {
-    // per-batch cache scope: the screen/merge ops register the
-    // batch's fingerprint table; release it at batch end so a
-    // long-running stream stays flat (one batch's caches at a time).
-    // `onHits` must therefore consume its DataFrame eagerly.
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      // op-aware: op='DELETE' rows (key only) route to the tombstone
-      // verb — the CDC deletion path, end-to-end in the stream. The
-      // delete→re-insert UPDATE (same batch or a later one) is handled
-      // by serving pending deletions inline: when the batch's merge
-      // collides with a tombstone, the maintenance tick runs first
-      // (between batches — the single-writer-safe moment), physically
-      // removing the old rows and clearing the tombstones, and only
-      // then does the merge land. Raising instead would crash-loop the
-      // stream: the checkpointed batch replays identically forever and
-      // the scheduled tick can never run behind a failing batch.
-      val (adds, dels) = splitOps(batch)
-      val hasAdds = !adds.isEmpty
-      if (hasAdds) {
-        val raw = graft.ops.DedupOps.queryFingerprintIndex(
-          spark, indexPath, adds)
-        // hits against docs this very batch deletes are not real
-        // duplicates — the pair's doc_old is gone the moment the batch
-        // commits; screen them out before the sink sees them
-        val hits = dels match {
-          case Some(d) => raw.join(
-            d.withColumnRenamed("doc_id", "doc_old"),
-            Seq("doc_old"), "left_anti")
-          case None => raw
-        }
-        onHits(hits, id)
+                      onHits: (DataFrame, Long) => Unit): Unit =
+    screenBatch(spark, batch, id, indexPath, streamId, onHits,
+      new HighWater, fingerprint(spark, indexPath))
+
+  /** What a screening family plugs into [[screenBatch]]: its compaction
+    * kind, its id column (`doc_id` / `vec_id`), its screen, tombstone
+    * and merge verbs, and `prepare`, which turns the batch's upsert rows
+    * into what the screen and the merge take (identity, except the
+    * image family's decode + hash). */
+  private final case class Screen(kind: String, key: String,
+                                  screen: DataFrame => DataFrame,
+                                  tombstone: DataFrame => Unit,
+                                  merge: DataFrame => Unit,
+                                  prepare: DataFrame => DataFrame = df => df)
+
+  private def fingerprint(spark: SparkSession, path: String) =
+    Screen("fingerprint", "doc_id",
+      DedupOps.queryFingerprintIndex(spark, path, _),
+      DedupOps.tombstoneFingerprintIndex(_, path),
+      DedupOps.mergeFingerprintIndex(_, path))
+
+  /** The ONE screen-and-absorb micro-batch body every screening family
+    * shares: split the batch by op, screen the upserts (hits to
+    * `onHits`), then — exactly once per (path, stream, id) — tombstone
+    * the deletes and merge the upserts.
+    *
+    * Per-batch cache scope: the screen/merge ops register the batch's
+    * tables; they are released at batch end so a long-running stream
+    * stays flat (one batch's caches at a time). `onHits` must therefore
+    * consume its DataFrame eagerly.
+    *
+    * Op-aware: op='DELETE' rows (key only) route to the family's
+    * tombstone verb — the CDC deletion path, end-to-end in the stream.
+    * The delete→re-insert UPDATE (same batch or a later one) is handled
+    * by serving pending deletions inline: when the batch's merge
+    * collides with a tombstone, the maintenance tick runs first
+    * (between batches — the single-writer-safe moment), physically
+    * removing the old rows and clearing the tombstones, and only then
+    * does the merge land. Raising instead would crash-loop the stream:
+    * the checkpointed batch replays identically forever and the
+    * scheduled tick can never run behind a failing batch. */
+  private def screenBatch(spark: SparkSession, batch: DataFrame, id: Long,
+                          path: String, streamId: String,
+                          onHits: (DataFrame, Long) => Unit,
+                          memo: HighWater, f: Screen): Unit =
+    if (!batch.isEmpty) Caches.withCached {
+      val (rows, deletes) = byOp(batch)
+      val dels = deletes.map(_.select(f.key)).filterNot(_.isEmpty)
+      val adds = if (rows.isEmpty) None else Some(f.prepare(rows))
+      // hits against rows this very batch deletes are not real matches —
+      // the indexed row is gone the moment the batch commits; screen
+      // them out before the sink sees them (text hits name the indexed
+      // doc `doc_old`, ANN hits the indexed `vec_id`)
+      val hitKey = if (f.key == "doc_id") "doc_old" else f.key
+      adds.foreach { a =>
+        val raw = f.screen(a)
+        onHits(dels.fold(raw)(d => raw.join(
+          d.withColumnRenamed(f.key, hitKey), Seq(hitKey), "left_anti")), id)
       }
-      absorbOnce(spark, indexPath, streamId, id) {
-        dels.foreach(d =>
-          graft.ops.DedupOps.tombstoneFingerprintIndex(d, indexPath))
-        if (hasAdds) {
-          serveTombstonesIfClashing(spark, indexPath, "fingerprint", adds)
-          graft.ops.DedupOps.mergeFingerprintIndex(adds, indexPath)
+      absorbOnce(spark, path, streamId, id, memo) {
+        dels.foreach(f.tombstone)
+        adds.foreach { a =>
+          serveTombstonesIfClashing(spark, path, f.kind, a, f.key)
+          f.merge(a)
         }
       }
     }
-    ()
-  }
 
   /** Run the family's maintenance tick iff the batch about to merge
     * collides with a pending tombstone — the inline deletion-serve that
@@ -496,7 +509,7 @@ object CdcStream {
                                         adds: DataFrame,
                                         key: String = "doc_id",
                                         retainApplied: Seq[String] = Nil): Unit = {
-    val clash = graft.engine.Compaction
+    val clash = Compaction
       .pendingTombstones(spark, indexPath, key).exists { t =>
         adds.select(col(key))
           .join(graft.engine.Skew.maybeBroadcast(t), Seq(key), "left_semi")
@@ -506,52 +519,60 @@ object CdcStream {
       retainApplied = retainApplied)
   }
 
-  /** Split an op-aware batch into (upserts-without-op, Some(delete-key
-    * table)) — or (batch, None) when no `op` column rides along. `key`
-    * names the family's id column (`doc_id` / `vec_id`); a DELETE row
-    * carries the key only. */
-  private def splitOps(batch: DataFrame,
-                       key: String = "doc_id"): (DataFrame, Option[DataFrame]) =
-    if (batch.columns.contains("op")) {
-      val dels = batch.filter(col("op") === "DELETE").select(key)
-      (batch.filter(coalesce(col("op") =!= "DELETE", lit(true))).drop("op"),
-        if (dels.isEmpty) None else Some(dels))
-    } else (batch, None)
+  /** The ONE op split every absorb family uses: an op-aware batch as
+    * (upserts, Some(deletes)), both without the `op` column — a null op
+    * is an upsert — or (batch, None) when no `op` column rides along.
+    * DELETE rows keep the rest of their row image; the key-only
+    * families select their key from it. */
+  private def byOp(batch: DataFrame): (DataFrame, Option[DataFrame]) =
+    if (!batch.columns.contains("op")) (batch, None)
+    else (batch.filter(coalesce(col("op") =!= "DELETE", lit(true))).drop("op"),
+      Some(batch.filter(col("op") === "DELETE").drop("op")))
+
+  /** One query's replay memo: the highest micro-batch id its stream has
+    * absorbed, `None` until [[absorbOnce]] seeds it from the ledger. The
+    * ledger stays the source of truth and the memo only caches it, so
+    * the memo is owned by whoever runs the batches — one per started
+    * query ([[fileStream]]), a fresh one per direct call — and dies
+    * with them. */
+  private final class HighWater { var absorbed: Option[Long] = None }
 
   /** Apply `merge` exactly once per (index, stream, micro-batch id) —
-    * the ledger replay protocol [[screenAndAbsorb]] established,
-    * factored out so every screen-and-absorb stream family (fingerprint
-    * text dedup, ANN embedding dedup) shares one implementation: check
-    * the per-process high-water memo (seeded from one ledger scan per
-    * (index, stream) per process — micro-batch ids are monotonic per
-    * checkpoint, so after seeding, replay detection is an in-memory
-    * compare), run the merge, append the ledger row, advance the memo.
-    * A merge that throws (e.g. the Compaction pointer guard) leaves no
-    * ledger row, so the batch replays on restart. */
-  private def absorbOnce(spark: SparkSession, indexPath: String,
-                         streamId: String, id: Long)(merge: => Unit): Unit = {
-    val memoKey = (indexPath, streamId)
-    val highWater = absorbedHighWater.getOrElseUpdate(memoKey, {
-      // one ledger scan per (index, stream) per process: the max
-      // batch id this stream has ever absorbed (-1 = none)
-      import org.apache.spark.sql.functions.{col, max}
-      val ledger = new graft.engine.Ledger(spark, s"$indexPath/_ledger")
+    * the ledger replay protocol [[screenAndAbsorb]] established, shared
+    * by every absorb family: check the memo (seeded from one ledger
+    * scan — micro-batch ids are monotonic per checkpoint, so after
+    * seeding, replay detection is an in-memory compare instead of a
+    * ledger scan per trigger growing with stream lifetime), run the
+    * merge, append the ledger row, advance the memo. A merge that throws
+    * (e.g. the Compaction pointer guard) leaves no ledger row, so the
+    * batch replays on restart. */
+  private def absorbOnce(spark: SparkSession, path: String, streamId: String,
+                         id: Long, memo: HighWater)(merge: => Unit): Unit = {
+    val ledger = new Ledger(spark, s"$path/_ledger")
+    // the max batch id this stream has ever absorbed (-1 = none)
+    val highWater = memo.absorbed.getOrElse(
       Option(ledger.read().filter(col("filename") === streamId)
         .agg(max(col("batch_id").cast("long"))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(-1L)
-    })
+        .fold(-1L)(_.asInstanceOf[Long]))
+    memo.absorbed = Some(highWater)
     if (id > highWater) {
       merge
-      new graft.engine.Ledger(spark, s"$indexPath/_ledger")
-        .append(streamId, id.toString)
-      absorbedHighWater.update(memoKey, id)
+      ledger.append(streamId, id.toString)
+      memo.absorbed = Some(id)
     }
   }
 
-  // per-process high-water mark of absorbed micro-batch ids, keyed by
-  // (index path, stream id) — see [[absorbOnce]]
-  private val absorbedHighWater =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  /** A non-empty batch, in one per-batch cache scope, applied exactly
+    * once by [[absorbOnce]]. `apply` gets the batch's stable
+    * "stream#id" tag: a crashed-ledger replay lays down byte-identical
+    * tagged rows that the views' batch-tagged dedup collapses
+    * (TextOps.vocabPartials). */
+  private def absorbBatch(spark: SparkSession, batch: DataFrame, id: Long,
+                          path: String, streamId: String, memo: HighWater)(
+                          apply: String => Unit): Unit =
+    if (!batch.isEmpty) Caches.withCached {
+      absorbOnce(spark, path, streamId, id, memo)(apply(s"$streamId#$id"))
+    }
 
   /** Streaming embedding dedup — [[dedupScreenStream]]'s ANN twin and
     * the CDC×ANN composition this platform exists for: each micro-batch
@@ -593,30 +614,16 @@ object CdcStream {
                       maintainMaxFiles: Int = 8,
                       retrainEvery: Int = 0,
                       retrainThreshold: Double = 2.0,
-                      retrainIters: Int = 2): StreamingQuery = {
-    // re-seed the replay memo at stream start (same reason as
-    // dedupScreenStream: the index may have been rebuilt at this path)
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        annScreenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
-          topK, minCosine, nprobe, onHits)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, indexPath, "ivf", maintainMaxFiles)
-        if (retrainEvery > 0 && id > 0 && id % retrainEvery == 0 &&
-            graft.ops.SimilarityOps.shouldRetrain(spark, indexPath,
-              retrainThreshold))
-          graft.ops.SimilarityOps.retrainIvfIndex(spark, indexPath,
-            iters = retrainIters)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                      retrainIters: Int = 2): StreamingQuery =
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      screenBatch(spark, batch, id, indexPath, checkpointDir, onHits, memo,
+        ann(spark, indexPath, topK, minCosine, nprobe))
+      if (every(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "ivf", maintainMaxFiles)
+      if (every(retrainEvery, id) &&
+          SimilarityOps.shouldRetrain(spark, indexPath, retrainThreshold))
+        SimilarityOps.retrainIvfIndex(spark, indexPath, iters = retrainIters)
+    }
 
   /** One ANN screen-and-absorb micro-batch — public for direct replay
     * testing, like [[screenAndAbsorb]]. The screen is read-only and
@@ -632,34 +639,17 @@ object CdcStream {
   def annScreenAndAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
                          indexPath: String, streamId: String,
                          topK: Int, minCosine: Double, nprobe: Int,
-                         onHits: (DataFrame, Long) => Unit): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      val (adds, dels) = splitOps(batch, "vec_id")
-      val hasAdds = !adds.isEmpty
-      if (hasAdds) {
-        val raw = graft.ops.SimilarityOps.queryIvfIndexBatch(spark,
-          indexPath, adds, topK, nprobe)
-          .filter(org.apache.spark.sql.functions.col("cosine") >= minCosine)
-        // hits against vectors this very batch deletes are not real
-        // matches — the indexed vector is gone the moment the batch
-        // commits; screen them out before the sink sees them
-        val hits = dels match {
-          case Some(d) => raw.join(d, Seq("vec_id"), "left_anti")
-          case None    => raw
-        }
-        onHits(hits, id)
-      }
-      absorbOnce(spark, indexPath, streamId, id) {
-        dels.foreach(d =>
-          graft.ops.SimilarityOps.tombstoneAnnIndex(d, indexPath))
-        if (hasAdds) {
-          serveTombstonesIfClashing(spark, indexPath, "ivf", adds, "vec_id")
-          graft.ops.SimilarityOps.mergeIvfIndex(adds, indexPath)
-        }
-      }
-    }
-    ()
-  }
+                         onHits: (DataFrame, Long) => Unit): Unit =
+    screenBatch(spark, batch, id, indexPath, streamId, onHits,
+      new HighWater, ann(spark, indexPath, topK, minCosine, nprobe))
+
+  private def ann(spark: SparkSession, path: String, topK: Int,
+                  minCosine: Double, nprobe: Int) =
+    Screen("ivf", "vec_id",
+      a => SimilarityOps.queryIvfIndexBatch(spark, path, a, topK, nprobe)
+        .filter(col("cosine") >= minCosine),
+      SimilarityOps.tombstoneAnnIndex(_, path),
+      SimilarityOps.mergeIvfIndex(_, path))
 
   /** Streaming IVF-PQ screen-and-absorb — [[annScreenStream]]'s
     * quantized sibling: each vector micro-batch is screened against the
@@ -709,64 +699,36 @@ object CdcStream {
     require(rebuildEvery <= 0 || rebuildFrom != null,
       "ivfPqScreenStream: rebuildEvery > 0 needs rebuildFrom — PQ codes " +
         "are lossy, the rebuild must read the caller's source corpus")
-    // re-seed the replay memo at stream start (same reason as
-    // dedupScreenStream: the index may have been rebuilt at this path)
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ivfPqScreenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
-          topK, maxAdc, nprobe, onHits)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, indexPath, "ivfpq", maintainMaxFiles)
-        if (rebuildEvery > 0 && id > 0 && id % rebuildEvery == 0 &&
-            graft.ops.SimilarityOps.shouldRetrainIvfPq(spark, indexPath,
-              rebuildThreshold))
-          graft.ops.SimilarityOps.rebuildIvfPqIndex(rebuildFrom(spark),
-            indexPath, iters = rebuildIters, pqIters = rebuildPqIters)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      screenBatch(spark, batch, id, indexPath, checkpointDir, onHits, memo,
+        ivfPq(spark, indexPath, topK, maxAdc, nprobe))
+      if (every(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "ivfpq", maintainMaxFiles)
+      if (every(rebuildEvery, id) &&
+          SimilarityOps.shouldRetrainIvfPq(spark, indexPath, rebuildThreshold))
+        SimilarityOps.rebuildIvfPqIndex(rebuildFrom(spark), indexPath,
+          iters = rebuildIters, pqIters = rebuildPqIters)
+    }
   }
 
   /** One IVF-PQ screen-and-absorb micro-batch — public for direct
-    * replay testing, like [[annScreenAndAbsorb]]. The screen is
-    * read-only and always re-run; the merge applies once per
-    * (streamId, id). */
+    * replay testing, like [[annScreenAndAbsorb]] (op-aware the same
+    * way, same inline deletion-serve). The screen is read-only and
+    * always re-run; the merge applies once per (streamId, id). */
   def ivfPqScreenAndAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
                            indexPath: String, streamId: String,
                            topK: Int, maxAdc: Double, nprobe: Int,
-                           onHits: (DataFrame, Long) => Unit): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      // op-aware like [[annScreenAndAbsorb]], same inline deletion-serve
-      val (adds, dels) = splitOps(batch, "vec_id")
-      val hasAdds = !adds.isEmpty
-      if (hasAdds) {
-        val raw = graft.ops.SimilarityOps.queryIvfPqIndexBatch(spark,
-          indexPath, adds, topK, nprobe)
-          .filter(org.apache.spark.sql.functions.col("adc_dist") <= maxAdc)
-        val hits = dels match {
-          case Some(d) => raw.join(d, Seq("vec_id"), "left_anti")
-          case None    => raw
-        }
-        onHits(hits, id)
-      }
-      absorbOnce(spark, indexPath, streamId, id) {
-        dels.foreach(d =>
-          graft.ops.SimilarityOps.tombstoneAnnIndex(d, indexPath))
-        if (hasAdds) {
-          serveTombstonesIfClashing(spark, indexPath, "ivfpq", adds,
-            "vec_id")
-          graft.ops.SimilarityOps.mergeIvfPqIndex(adds, indexPath)
-        }
-      }
-    }
-    ()
-  }
+                           onHits: (DataFrame, Long) => Unit): Unit =
+    screenBatch(spark, batch, id, indexPath, streamId, onHits,
+      new HighWater, ivfPq(spark, indexPath, topK, maxAdc, nprobe))
+
+  private def ivfPq(spark: SparkSession, path: String, topK: Int,
+                    maxAdc: Double, nprobe: Int) =
+    Screen("ivfpq", "vec_id",
+      a => SimilarityOps.queryIvfPqIndexBatch(spark, path, a, topK, nprobe)
+        .filter(col("adc_dist") <= maxAdc),
+      SimilarityOps.tombstoneAnnIndex(_, path),
+      SimilarityOps.mergeIvfPqIndex(_, path))
 
   /** Streaming IMAGE dedup — [[dedupScreenStream]]'s multimodal twin:
     * each micro-batch of (doc_id, payload) rows carrying REAL image
@@ -789,69 +751,35 @@ object CdcStream {
                         indexPath: String, maxDist: Int,
                         onHits: (DataFrame, Long) => Unit,
                         maintainEvery: Int = 0,
-                        maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        imageScreenAndAbsorb(spark, batch, id, indexPath, checkpointDir,
-          maxDist, onHits)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, indexPath, "ahash", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                        maintainMaxFiles: Int = 8): StreamingQuery =
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      screenBatch(spark, batch, id, indexPath, checkpointDir, onHits, memo,
+        image(spark, indexPath, maxDist))
+      if (every(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "ahash", maintainMaxFiles)
+    }
 
   /** One image screen-and-absorb micro-batch — public for direct replay
     * testing. `batch` carries (doc_id, payload base64-string-or-binary);
-    * the aHash is computed ONCE per batch and cached for the batch's
-    * scope (screen + absorb share it), released at batch end. */
+    * DELETE rows carry the key only (no payload to decode). The aHash
+    * is computed ONCE per batch and cached for the batch's scope
+    * (screen + absorb share it), released at batch end. */
   def imageScreenAndAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
                            indexPath: String, streamId: String,
                            maxDist: Int,
-                           onHits: (DataFrame, Long) => Unit): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      // op-aware like [[screenAndAbsorb]], same inline deletion-serve:
-      // DELETE rows carry the key only (no payload to decode)
-      val (adds, dels) = splitOps(batch)
-      val sk =
-        if (adds.isEmpty) None
-        else {
-          val payload =
-            if (adds.schema("payload").dataType ==
-                org.apache.spark.sql.types.StringType)
-              adds.select(col("doc_id"), unbase64(col("payload")).as("payload"))
-            else adds.select(col("doc_id"), col("payload"))
-          Some(graft.engine.Caches.ensureCached(
-            graft.ops.Multimodal.imageAHash(payload)))
-        }
-      sk.foreach { k =>
-        val raw = graft.ops.DedupOps.queryHashIndex(spark, k, indexPath,
-          maxDist)
-        val hits = dels match {
-          case Some(d) => raw.join(
-            d.withColumnRenamed("doc_id", "doc_old"),
-            Seq("doc_old"), "left_anti")
-          case None => raw
-        }
-        onHits(hits, id)
-      }
-      absorbOnce(spark, indexPath, streamId, id) {
-        dels.foreach(d =>
-          graft.ops.DedupOps.tombstoneHashIndex(d, indexPath))
-        sk.foreach { k =>
-          serveTombstonesIfClashing(spark, indexPath, "ahash", k)
-          graft.ops.DedupOps.mergeHashIndex(k, indexPath)
-        }
-      }
-    }
-    ()
-  }
+                           onHits: (DataFrame, Long) => Unit): Unit =
+    screenBatch(spark, batch, id, indexPath, streamId, onHits,
+      new HighWater, image(spark, indexPath, maxDist))
+
+  private def image(spark: SparkSession, path: String, maxDist: Int) =
+    Screen("ahash", "doc_id",
+      DedupOps.queryHashIndex(spark, _, path, maxDist),
+      DedupOps.tombstoneHashIndex(_, path),
+      DedupOps.mergeHashIndex(_, path),
+      prepare = adds => Caches.ensureCached(graft.ops.Multimodal.imageAHash(
+        if (adds.schema("payload").dataType == StringType)
+          adds.select(col("doc_id"), unbase64(col("payload")).as("payload"))
+        else adds.select(col("doc_id"), col("payload")))))
 
   /** Streaming incremental-view maintenance for the vocabulary
     * aggregate: each document micro-batch's per-word partial counts are
@@ -866,22 +794,12 @@ object CdcStream {
                         checkpointDir: String, schema: StructType,
                         viewPath: String,
                         maintainEvery: Int = 0,
-                        maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((viewPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        vocabAbsorb(spark, batch, id, viewPath, checkpointDir)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, viewPath, "vocab", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                        maintainMaxFiles: Int = 8): StreamingQuery =
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      vocabBatch(spark, batch, id, viewPath, checkpointDir, memo)
+      if (every(maintainEvery, id))
+        maintainStreamedIndex(spark, viewPath, "vocab", maintainMaxFiles)
+    }
 
   /** [[vocabAbsorbStream]] plus the TOKENIZER lifecycle — the complete
     * streaming loop a production corpus runs: each batch's word counts
@@ -904,25 +822,17 @@ object CdcStream {
                            retrainEvery: Int = 1,
                            unkThreshold: Double = 0.01,
                            maintainEvery: Int = 0,
-                           maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((viewPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        vocabAbsorb(spark, batch, id, viewPath, checkpointDir)
-        if (retrainEvery > 0 && id % retrainEvery == 0)
-          maintainTokenizer(spark, viewPath, tokPath, batch, rules,
-            unkThreshold)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, viewPath, "vocab", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                           maintainMaxFiles: Int = 8): StreamingQuery =
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      vocabBatch(spark, batch, id, viewPath, checkpointDir, memo)
+      // unlike every other tick this one runs on batch 0 (no `every`):
+      // the first batch must build the missing tokenizer
+      if (retrainEvery > 0 && id % retrainEvery == 0)
+        maintainTokenizer(spark, viewPath, tokPath, batch, rules,
+          unkThreshold)
+      if (every(maintainEvery, id))
+        maintainStreamedIndex(spark, viewPath, "vocab", maintainMaxFiles)
+    }
 
   /** One tokenizer-maintenance tick: retrain from the view if no
     * artifact exists yet or `sample`'s UNK mass under the stored
@@ -931,7 +841,6 @@ object CdcStream {
   def maintainTokenizer(spark: SparkSession, viewPath: String,
                         tokPath: String, sample: DataFrame, rules: Int,
                         unkThreshold: Double): Boolean = {
-    import graft.ops.TextOps
     val missing = !TextOps.tokenizerExists(tokPath)
     val due = missing || (!sample.isEmpty &&
       TextOps.shouldRetrainTokenizer(spark, sample, tokPath, unkThreshold))
@@ -949,26 +858,24 @@ object CdcStream {
     * re-applies neither half. Without an `op` column the batch is
     * purely additive, as before. */
   def vocabAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
-                  viewPath: String, streamId: String): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      absorbOnce(spark, viewPath, streamId, id) {
-        // stable (stream, batch-id) tags: a crashed-ledger replay lays
-        // down byte-identical partial rows that the view's batch-tagged
-        // dedup collapses (TextOps.vocabPartials)
-        val tag = s"$streamId#$id"
-        if (batch.columns.contains("op")) {
-          val adds = batch.filter(coalesce(col("op") =!= "DELETE", lit(true)))
-          val dels = batch.filter(col("op") === "DELETE")
+                  viewPath: String, streamId: String): Unit =
+    vocabBatch(spark, batch, id, viewPath, streamId, new HighWater)
+
+  private def vocabBatch(spark: SparkSession, batch: DataFrame, id: Long,
+                         viewPath: String, streamId: String,
+                         memo: HighWater): Unit =
+    absorbBatch(spark, batch, id, viewPath, streamId, memo) { tag =>
+      // the view reads only doc_id and text, so the split's dropped
+      // `op` column is never missed
+      byOp(batch) match {
+        case (adds, None) => TextOps.mergeVocabIndex(adds, viewPath, s"$tag:merge")
+        case (adds, Some(dels)) =>
           if (!adds.isEmpty)
-            graft.ops.TextOps.mergeVocabIndex(adds, viewPath, s"$tag:merge")
+            TextOps.mergeVocabIndex(adds, viewPath, s"$tag:merge")
           if (!dels.isEmpty)
-            graft.ops.TextOps.retractVocabIndex(dels, viewPath,
-              s"$tag:retract")
-        } else graft.ops.TextOps.mergeVocabIndex(batch, viewPath, s"$tag:merge")
+            TextOps.retractVocabIndex(dels, viewPath, s"$tag:retract")
       }
     }
-    ()
-  }
 
   /** Streaming incremental maintenance for the stored BM25 inverted
     * index — the keyword-retrieval absorb loop: each document
@@ -985,22 +892,12 @@ object CdcStream {
                        checkpointDir: String, schema: StructType,
                        indexPath: String,
                        maintainEvery: Int = 0,
-                       maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((indexPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        bm25Absorb(spark, batch, id, indexPath, checkpointDir)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, indexPath, "bm25", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       maintainMaxFiles: Int = 8): StreamingQuery =
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      bm25Batch(spark, batch, id, indexPath, checkpointDir, memo)
+      if (every(maintainEvery, id))
+        maintainStreamedIndex(spark, indexPath, "bm25", maintainMaxFiles)
+    }
 
   /** One BM25 absorb micro-batch — public for direct replay testing.
     * Retraction runs BEFORE the merge (tombstone first, then serve the
@@ -1014,29 +911,27 @@ object CdcStream {
     * still find its signature or it would subtract lexicon df and
     * stats a second time. */
   def bm25Absorb(spark: SparkSession, batch: DataFrame, id: Long,
-                 indexPath: String, streamId: String): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      absorbOnce(spark, indexPath, streamId, id) {
-        if (batch.columns.contains("op")) {
+                 indexPath: String, streamId: String): Unit =
+    bm25Batch(spark, batch, id, indexPath, streamId, new HighWater)
+
+  private def bm25Batch(spark: SparkSession, batch: DataFrame, id: Long,
+                        indexPath: String, streamId: String,
+                        memo: HighWater): Unit =
+    absorbBatch(spark, batch, id, indexPath, streamId, memo) { _ =>
+      byOp(batch) match {
+        case (adds, None) => TextOps.mergeBm25Index(adds, indexPath)
+        case (adds, Some(dels)) =>
           // the retract needs the full row image, so DELETE rows keep
-          // every column (unlike the key-only splitOps families)
-          val adds = batch
-            .filter(coalesce(col("op") =!= "DELETE", lit(true))).drop("op")
-          val dels = batch.filter(col("op") === "DELETE").drop("op")
-          val retractSig =
-            if (!dels.isEmpty)
-              Some(graft.ops.TextOps.retractBm25Index(dels, indexPath))
-            else None
+          // every column (unlike the key-only screening families)
+          val retractSig = Option.when(!dels.isEmpty)(
+            TextOps.retractBm25Index(dels, indexPath))
           if (!adds.isEmpty) {
             serveTombstonesIfClashing(spark, indexPath, "bm25", adds,
               retainApplied = retractSig.toSeq)
-            graft.ops.TextOps.mergeBm25Index(adds, indexPath)
+            TextOps.mergeBm25Index(adds, indexPath)
           }
-        } else graft.ops.TextOps.mergeBm25Index(batch, indexPath)
       }
     }
-    ()
-  }
 
   /** Streaming maintenance of the distinct-count sketch view
     * ([[graft.engine.Stats.buildDistinctView]]) — the vocab absorb's
@@ -1053,22 +948,13 @@ object CdcStream {
                            checkpointDir: String, schema: StructType,
                            viewPath: String, group: String, key: String,
                            maintainEvery: Int = 0,
-                           maintainMaxFiles: Int = 8): StreamingQuery = {
-    absorbedHighWater.remove((viewPath, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        distinctAbsorb(spark, batch, id, viewPath, group, key, checkpointDir)
-        if (maintainEvery > 0 && id > 0 && id % maintainEvery == 0)
-          maintainStreamedIndex(spark, viewPath, "hll", maintainMaxFiles)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                           maintainMaxFiles: Int = 8): StreamingQuery =
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      distinctBatch(spark, batch, id, viewPath, group, key, checkpointDir,
+        memo)
+      if (every(maintainEvery, id))
+        maintainStreamedIndex(spark, viewPath, "hll", maintainMaxFiles)
+    }
 
   /** One distinct-view absorb micro-batch — public for replay testing.
     * Op-aware (r17): op='DELETE' rows (full row image — the CDC
@@ -1087,26 +973,26 @@ object CdcStream {
     * loudly inside retractDistinctView — route those to a rebuild. */
   def distinctAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
                      viewPath: String, group: String, key: String,
-                     streamId: String): Unit = {
-    if (!batch.isEmpty) graft.engine.Caches.withCached {
-      absorbOnce(spark, viewPath, streamId, id) {
-        val tag = s"$streamId#$id"
-        if (batch.columns.contains("op")) {
-          val adds = batch
-            .filter(coalesce(col("op") =!= "DELETE", lit(true))).drop("op")
-          val dels = batch.filter(col("op") === "DELETE").drop("op")
+                     streamId: String): Unit =
+    distinctBatch(spark, batch, id, viewPath, group, key, streamId,
+      new HighWater)
+
+  private def distinctBatch(spark: SparkSession, batch: DataFrame, id: Long,
+                            viewPath: String, group: String, key: String,
+                            streamId: String, memo: HighWater): Unit =
+    absorbBatch(spark, batch, id, viewPath, streamId, memo) { tag =>
+      import graft.engine.Stats
+      byOp(batch) match {
+        case (adds, None) =>
+          Stats.mergeDistinctView(adds, group, key, viewPath, s"$tag:merge")
+        case (adds, Some(dels)) =>
           if (!dels.isEmpty)
-            graft.engine.Stats.retractDistinctView(dels, group, key,
-              viewPath, s"$tag:retract")
+            Stats.retractDistinctView(dels, group, key, viewPath,
+              s"$tag:retract")
           if (!adds.isEmpty)
-            graft.engine.Stats.mergeDistinctView(adds, group, key,
-              viewPath, s"$tag:merge")
-        } else graft.engine.Stats.mergeDistinctView(batch, group, key,
-          viewPath, s"$tag:merge")
+            Stats.mergeDistinctView(adds, group, key, viewPath, s"$tag:merge")
       }
     }
-    ()
-  }
 
   /** Streaming maintenance for the VERSIONED SNAPSHOT and its derived
     * layout artifacts — the z-ordered OPTIMIZE publish and the verified
@@ -1160,21 +1046,12 @@ object CdcStream {
                            key: String = "doc_id"): StreamingQuery = {
     require(exportPath.isEmpty || tokensPerShard > 0L,
       "snapshotAbsorbStream: an export path needs tokensPerShard > 0")
-    absorbedHighWater.remove((storeRoot, checkpointDir))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inGlob)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        snapshotAbsorb(spark, batch, id, storeRoot, checkpointDir, key)
-        if (optimizeEvery > 0 && id > 0 && id % optimizeEvery == 0)
-          optimizeSnapshotTick(spark, storeRoot, a, b, tie, numFiles,
-            keepVersions, exportPath, tokensPerShard)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    fileStream(spark, inGlob, checkpointDir, schema) { (batch, id, memo) =>
+      snapshotBatch(spark, batch, id, storeRoot, checkpointDir, key, memo)
+      if (every(optimizeEvery, id))
+        optimizeSnapshotTick(spark, storeRoot, a, b, tie, numFiles,
+          keepVersions, exportPath, tokensPerShard)
+    }
   }
 
   /** One snapshot-absorb micro-batch — public for replay testing.
@@ -1190,8 +1067,13 @@ object CdcStream {
     * of baking duplicates into every later version and export. */
   def snapshotAbsorb(spark: SparkSession, batch: DataFrame, id: Long,
                      storeRoot: String, streamId: String,
-                     key: String = "doc_id"): Unit = {
-    if (!batch.isEmpty) absorbOnce(spark, storeRoot, streamId, id) {
+                     key: String = "doc_id"): Unit =
+    snapshotBatch(spark, batch, id, storeRoot, streamId, key, new HighWater)
+
+  private def snapshotBatch(spark: SparkSession, batch: DataFrame, id: Long,
+                            storeRoot: String, streamId: String, key: String,
+                            memo: HighWater): Unit =
+    absorbBatch(spark, batch, id, storeRoot, streamId, memo) { _ =>
       val store = new SnapshotStore(spark, storeRoot)
       // op-aware: a batch carrying an `op` column routes op='DELETE'
       // keys to REMOVAL — the right-to-be-forgotten flow a training
@@ -1203,12 +1085,8 @@ object CdcStream {
       // versions retained for time travel still carry the key until
       // the compliance sweep (SnapshotStore.purgeKeys) rewrites the
       // whole retained window.
-      val (rawUpserts, deleteKeys) =
-        if (batch.columns.contains("op"))
-          (batch.filter(coalesce(col("op") =!= "DELETE", lit(true)))
-             .drop("op"),
-           Some(batch.filter(col("op") === "DELETE").select(key)))
-        else (batch, None)
+      val (rawUpserts, deletes) = byOp(batch)
+      val deleteKeys = deletes.map(_.select(key))
       // intra-batch key discipline: exact duplicate ROWS fold (a file
       // re-delivering the same record twice), but two DIFFERENT rows
       // for one key in one batch are refused loudly — this verb's
@@ -1225,18 +1103,14 @@ object CdcStream {
           "upstream")
       val next = store.read() match {
         case Some(cur) =>
-          val victims = deleteKeys match {
-            case Some(d) => upserts.select(key).unionByName(d)
-            case None    => upserts.select(key)
-          }
+          val victims = deleteKeys.fold(upserts.select(key))(
+            upserts.select(key).unionByName(_))
           cur.join(victims, Seq(key), "left_anti").unionByName(upserts)
         case None => upserts
       }
       store.publish(next)
       ()
     }
-    ()
-  }
 
   /** The snapshot OPTIMIZE + export maintenance tick — public so a
     * quiesced deployment (or a replay test) can run it directly. MUST

@@ -2216,5 +2216,152 @@ class StreamingSpec extends AnyFunSuite {
         java.nio.file.Paths.get(s"$idx/tombstones")))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }
-}
 
+  test("direct screen-and-absorb after an index rebuild at the same path " +
+    "absorbs again: the replay memo re-seeds from the rebuilt ledger") {
+    import graft.ops.DedupOps
+    val idx = Files.createTempDirectory("rbm_idx").toString
+    def body(p: String) = (1 to 50).map(j => s"$p$j").mkString(" ")
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def consume(df: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+      df.count(); ()
+    }
+    DedupOps.buildFingerprintIndex(docs((1L, body("ra"))), idx)
+    CdcStream.screenAndAbsorb(spark, docs((5L, body("rb"))), 0L, idx, "s",
+      consume)
+    // rebuild at the same path: the ledger goes with the old index, so
+    // batch id 0 of stream "s" is unabsorbed again
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idx))
+    DedupOps.buildFingerprintIndex(docs((1L, body("ra"))), idx)
+    CdcStream.screenAndAbsorb(spark, docs((7L, body("rc"))), 0L, idx, "s",
+      consume)
+    val probe = docs((900L, body("rc") + " tail"))
+    assert(DedupOps.queryFingerprintIndex(spark, idx, probe)
+      .filter($"doc_old" === 7L).count() === 1L,
+      "the second batch's doc must be absorbed into the rebuilt index")
+    assert(spark.read.parquet(
+      graft.engine.Compaction.resolve(s"$idx/_ledger")).count() === 1L)
+  }
+
+  test("start's materialize tick runs through the stream: the manifest " +
+    "chain resets and the pre-materialize owners age out at vacuum") {
+    import org.apache.spark.sql.types.StructType
+    val in = Files.createTempDirectory("smt_in").toString
+    val snap = Files.createTempDirectory("smt_snap").toString
+    val store = new SnapshotStore(spark, snap)
+    def jl(id: Long, key: Long, ts: String) =
+      s"""{"change_id":$id,"order_key":$key,"cdc_timestamp":"$ts",""" +
+        s""""status":"s$id"}"""
+    // file 0 seeds 32 keys (bootstrap, local v0); files 1 and 2 each
+    // touch one hot key, so their incremental publishes carry the other
+    // buckets by manifest; materializeEvery = 2 fires after batch 2
+    val files = Seq(
+      (1L to 32L).map(k => jl(k, k, "2024-01-01 00:00:00")),
+      Seq(jl(100L, 3L, "2024-02-01 00:00:00")),
+      Seq(jl(101L, 5L, "2024-03-01 00:00:00")))
+    files.zipWithIndex.foreach { case (lines, i) =>
+      val f = java.nio.file.Paths.get(in, f"changes_$i%03d.json")
+      Files.writeString(f, lines.mkString("", "\n", "\n"))
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - (600 - i * 60) * 1000L))
+    }
+    val schema = new StructType().add("change_id", "long")
+      .add("order_key", "long").add("cdc_timestamp", "timestamp")
+      .add("status", "string")
+    CdcStream.start(spark, s"$in/changes_*.json",
+      Files.createTempDirectory("smt_ckpt").toString, store, schema,
+      "order_key", "cdc_timestamp", "change_id", dimBuckets = 16,
+      manifestCarry = true, materializeEvery = 2).awaitTermination()
+    assert(store.currentVersion() === Some(3L),
+      "three batch publishes plus one materialize")
+    assert(!Files.exists(java.nio.file.Paths.get(snap, "v3", "_MANIFEST")),
+      "the tick publishes a fully-local version")
+    assert(store.vacuum(keepLast = 1).toSet === Set(0L, 1L, 2L),
+      "the pre-materialize chain must age out after the tick")
+    val all = spark.read.schema(schema).json(s"$in/changes_*.json")
+    val oneShot = Scd2.merge(
+      Scd2.rebuild(all.limit(0), "order_key", "cdc_timestamp", "change_id"),
+      all, "order_key", "cdc_timestamp", "change_id")
+    def cur(d: org.apache.spark.sql.DataFrame) = Scd2.current(d)
+      .select("order_key", "change_id", "status", "valid_from")
+      .orderBy("order_key").collect().toSeq
+    assert(cur(store.read().get) === cur(oneShot))
+  }
+
+  test("BM25 absorb stream equals direct absorbs of the same batches; " +
+    "a replayed batch re-absorbs nothing") {
+    import graft.ops.TextOps
+    import graft.engine.Compaction
+    import org.apache.spark.sql.types.StructType
+    val in = Files.createTempDirectory("bms_in").toString
+    val ckpt = Files.createTempDirectory("bms_ckpt").toString
+    val idx = Files.createTempDirectory("bms_idx").toString
+    val direct = Files.createTempDirectory("bms_direct").toString
+    val mk = Map(
+      1L -> ("spark join window " + (1 to 30).map("w" + _).mkString(" ")),
+      2L -> ("spark spark join " + (1 to 20).map("x" + _).mkString(" ")),
+      3L -> ("window join " + (1 to 25).map("y" + _).mkString(" ")),
+      4L -> ("spark window " + (1 to 15).map("z" + _).mkString(" ")),
+      5L -> ("join join refresh " + (1 to 12).map("v" + _).mkString(" ")))
+    val base = Seq(1L, 2L, 3L).map(k => (k, mk(k))).toDF("doc_id", "text")
+    TextOps.buildBm25Index(base, idx)
+    TextOps.buildBm25Index(base, direct)
+    def jl(id: Long, op: String) =
+      s"""{"doc_id":$id,"text":"${mk(id)}","op":"$op"}"""
+    // file 0 inserts doc 4; file 1 deletes doc 2 (full row image) and
+    // inserts doc 5
+    val files = Seq(Seq(jl(4L, "I")), Seq(jl(2L, "DELETE"), jl(5L, "I")))
+    files.zipWithIndex.foreach { case (lines, i) =>
+      val f = java.nio.file.Paths.get(in, f"docs_$i%03d.json")
+      Files.writeString(f, lines.mkString("", "\n", "\n"))
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - (600 - i * 60) * 1000L))
+    }
+    val schema = new StructType().add("doc_id", "long")
+      .add("text", "string").add("op", "string")
+    def drain(): Unit = CdcStream.bm25AbsorbStream(spark,
+      s"$in/docs_*.json", ckpt, schema, idx).awaitTermination()
+    drain()
+    files.indices.foreach { i =>
+      CdcStream.bm25Absorb(spark,
+        spark.read.schema(schema).json(f"$in/docs_$i%03d.json"), i.toLong,
+        direct, "direct")
+    }
+    val terms = Seq("spark", "join", "window", "refresh")
+    def scores(path: String) = TextOps.queryBm25Index(spark, path, terms, 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val want = scores(direct)
+    assert(scores(idx) === want,
+      "the stream must land what direct absorbs of its batches land")
+    def ledgerRows() =
+      spark.read.parquet(Compaction.resolve(s"$idx/_ledger")).count()
+    assert(ledgerRows() === 2L)
+    // crash after the last merge, before its checkpoint commit: the
+    // restarted query re-delivers batch 1, and the ledger skips it
+    Seq("1", ".1.crc").foreach(f =>
+      Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", f)))
+    drain()
+    assert(ledgerRows() === 2L, "the replayed batch must not re-absorb")
+    assert(scores(idx) === want)
+  }
+
+  test("the tokenizer tick fires on batch 0: a one-file stream builds " +
+    "the missing tokenizer") {
+    import graft.ops.TextOps
+    import org.apache.spark.sql.types.StructType
+    val in = Files.createTempDirectory("tk0_in").toString
+    val view = Files.createTempDirectory("tk0_view").toString
+    val tok = Files.createTempDirectory("tk0_tok").toString + "/tok"
+    TextOps.buildVocabIndex(
+      Seq((0L, "alpha beta alpha")).toDF("doc_id", "text"), view)
+    Files.writeString(java.nio.file.Paths.get(in, "docs_000.json"),
+      """{"doc_id":1,"text":"alpha beta gamma alpha beta"}""" + "\n")
+    val schema = new StructType().add("doc_id", "long").add("text", "string")
+    assert(!TextOps.tokenizerExists(tok))
+    CdcStream.vocabTokenizerStream(spark, s"$in/docs_*.json",
+      Files.createTempDirectory("tk0_ckpt").toString, schema, view, tok,
+      rules = 2, retrainEvery = 2).awaitTermination()
+    assert(TextOps.tokenizerExists(tok),
+      "batch 0 must build the missing tokenizer")
+  }
+}
